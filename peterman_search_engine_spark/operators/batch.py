@@ -3,85 +3,89 @@
 The reference (like any single-node engine) evaluates one query per
 call (``InvertedIndexManager.searchTfIdf``, IIM:543-...). On a
 cluster, per-query jobs waste the scan: a thousand BM25 queries touch
-largely the same postings. This operator evaluates a query-set
-DataFrame ``(qid, term, qtf)`` in ONE job:
+largely the same postings. This operator ranks a ``{qid: [terms]}``
+log with the segment-local kernel (``functions/scoring.py``):
 
-1. postings are scanned ONCE, IN-filtered to the union of all query
-   terms (pushdown intact — for a big log this converges to a full
-   posting scan, which is exactly the amortization);
-2. exploded hits join doc_stats on doc_id (one shuffle-hash join),
-   then fan out across queries via a BROADCAST join on term — each
-   posting row multiplies only by the queries that contain its term;
-3. per-(qid, doc) partial+final hash aggregation of BM25
-   contributions;
-4. per-query top-k as a window rank over (qid), shuffling only the
-   SCORED rows.
+1. the driver analyzes every query, reads the df of the union of
+   their terms with ONE term_stats collect, and builds the fan-out
+   table ``term -> (qids, qtf·idf)`` as Python constants;
+2. postings are scanned ONCE, IN-filtered to that union (pushdown
+   intact — for a big log this converges to a full posting scan,
+   which is exactly the amortization), grouped by segment and
+   cogrouped with the segment's doc_stats rows (tombstoned docs
+   anti-joined out of doc_stats first, so they have no length and
+   never score);
+3. one Arrow function per segment computes each posting's BM25 factor
+   once, fans it out to the queries containing its term, sums per
+   (qid, doc) and keeps each qid's top k;
+4. a window rank over qid merges the per-segment survivors, shuffling
+   at most k × segments rows per query.
 
-Wall-clock is sublinear in #queries (the scan/join dominate and are
+Wall-clock is sublinear in #queries (the scan dominates and is
 shared); the driver never sees more than the final k×|queries| rows.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .indexer import B, K1, InvertedIndex
-from .query import _live, _postings_for
+from ..functions import scoring
+from ..functions.analysis import analyze_query
+from .indexer import InvertedIndex
+from .query import _segment_groups, _term_df
+
+BATCH_SCHEMA = "qid long, doc_id long, score double"
 
 
-def _query_table(index: InvertedIndex, queries: dict[int, list[str]]) -> DataFrame:
-    """Analyze each query's terms and emit (qid, term, qtf) rows.
-    Queries whose terms all analyze away simply produce no rows."""
-    from ..functions.analysis import analyze_query
-
-    rows = []
+def _query_table(
+    index: InvertedIndex, queries: dict[int, list[str]]
+) -> dict[int, dict[str, int]]:
+    """Analyze each query's terms: {qid: {term: qtf}}. Queries whose
+    terms all analyze away are dropped."""
+    out: dict[int, dict[str, int]] = {}
     for qid, terms in sorted(queries.items()):
         qtf: dict[str, int] = {}
         for t in analyze_query(terms, stem=index.stem):
             qtf[t] = qtf.get(t, 0) + 1
-        rows += [(int(qid), t, float(n)) for t, n in sorted(qtf.items())]
-    spark = index.postings.sparkSession
-    return spark.createDataFrame(rows, "qid long, term string, qtf double")
+        if qtf:
+            out[int(qid)] = qtf
+    return out
 
 
 def batch_bm25_scores(
-    index: InvertedIndex, qterms: DataFrame
+    index: InvertedIndex,
+    queries: dict[int, dict[str, int]],
+    top_k: int,
 ) -> DataFrame:
-    """Score every (qid, doc) pair for a query table ``(qid, term,
-    qtf)``. Returns (qid, doc_id, score). The query table is assumed
-    driver-small relative to the corpus (a query LOG, not a corpus) —
-    it is broadcast; at the point where the log itself stops fitting
-    in a broadcast, drop the hint and Catalyst falls back to a
-    shuffle join, the plan is otherwise unchanged."""
-    idf = (
-        index.term_stats.join(
-            F.broadcast(qterms.select("term").distinct()), "term"
-        )
-        .withColumn("idf", index.bm25_idf_col())
-        .select("term", "idf")
-    )
-    terms = [r["term"] for r in qterms.select("term").distinct().collect()]
-    p = _postings_for(index, terms)
-    hits = p.select(
-        "term", F.explode(F.arrays_zip("doc_ids", "tfs")).alias("_z")
-    ).select(
-        "term", F.col("_z.doc_ids").alias("doc_id"), F.col("_z.tfs").alias("tf")
-    )
-    denom = F.col("tf") + F.lit(K1) * (
-        F.lit(1 - B) + F.lit(B) * F.col("doc_len") / F.lit(index.avg_len)
-    )
-    contrib = F.col("qtf") * F.col("idf") * F.col("tf") * F.lit(K1 + 1) / denom
-    scored = (
-        hits.join(index.doc_stats, "doc_id")
-        .join(F.broadcast(qterms), "term")           # the per-query fan-out
-        .join(F.broadcast(idf), "term")
-        .withColumn("_c", contrib)
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("_c").alias("score"))
-    )
-    return _live(index, scored)
+    """Score the (qid, doc) pairs for analyzed queries ``{qid: {term:
+    qtf}}`` in one segment-local pass. Each segment keeps only the rows
+    that can still be in their qid's top k: score at least the
+    segment's k-th best for that qid minus ``scoring.TOPK_SLACK``.
+    Tombstoned docs never score. Returns (qid, doc_id, score)."""
+    spark = index.postings.sparkSession
+    df = _term_df(index, {t for q in queries.values() for t in q})
+    fan: dict[str, tuple[list, list]] = {}
+    for qid, qtf in sorted(queries.items()):
+        for t, n in sorted(qtf.items()):
+            if t in df:
+                qs, ws = fan.setdefault(t, ([], []))
+                qs.append(qid)
+                ws.append(n * index.bm25_idf(df[t]))
+    if not fan:
+        return spark.createDataFrame([], BATCH_SCHEMA)
+    fan_np = {t: (np.array(q, np.int64), np.array(w)) for t, (q, w) in fan.items()}
+    # deleted docs get no length row, so they never score — not even
+    # into a segment's top k
+    doc_stats = index.doc_stats
+    if index.tombstones is not None:
+        doc_stats = doc_stats.join(index.tombstones, "doc_id", "left_anti")
+    kernel = partial(scoring.batch_bm25_segment, fan_np, index.avg_len, top_k)
+    return _segment_groups(index, sorted(fan), kernel, BATCH_SCHEMA, doc_stats)
 
 
 def batch_bm25_topk(
@@ -91,13 +95,12 @@ def batch_bm25_topk(
     *,
     rank_e6: bool = False,
 ) -> DataFrame:
-    """Top-k BM25 per query for a {qid: [terms]} log, in one job.
+    """Top-k BM25 per query for a {qid: [terms]} log, in one plan.
     Returns (qid, doc_id, score) — or (qid, doc_id, score_e6) with
     engine-portable e6-rounded ranking when ``rank_e6`` is set (the
     driver-oracle mode). Ties break (score desc, doc_id asc) within
     each qid."""
-    qterms = _query_table(index, queries)
-    scored = batch_bm25_scores(index, qterms)
+    scored = batch_bm25_scores(index, _query_table(index, queries), top_k)
     if rank_e6:
         scored = scored.withColumn(
             "score_e6", F.round(F.col("score") * 1_000_000).cast("long")

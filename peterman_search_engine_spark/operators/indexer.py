@@ -66,11 +66,17 @@ from ..functions.codec import (
     delta_varint_encode,
     delta_varint_encode_grouped,
 )
+from ..functions.scoring import B, K1
 
-K1 = 1.2
-B = 0.75
 DEFAULT_DOCS_PER_SEGMENT = 100_000
 DEFAULT_BLOCK_SIZE = 128
+
+
+def segment_col(docs_per_segment: int):
+    """The doc_id-range segment of a doc: ``doc_id // docs_per_segment``.
+    Posting rows and doc_stats rows use this ONE expression, so a doc's
+    length always lives in the segment of its posting rows."""
+    return (F.col("doc_id") / F.lit(docs_per_segment)).cast("long")
 
 _ENC_SCHEMA = StructType(
     [
@@ -206,7 +212,12 @@ class InvertedIndex:
                 blob binary, block_starts array<long>,
                 block_ubs array<double>)
     term_stats (term string, df long, cf long)     [global]
-    doc_stats  (doc_id long, doc_len int)
+    doc_stats  (doc_id long, segment long, doc_len int)
+               segment = the segment of that doc's posting rows, so
+               ranked queries score each segment from its own rows
+               (the segment-local kernel, functions/scoring.py);
+               persisted indexes store (doc_id, doc_len) and derive
+               segment = doc_id // docs_per_segment at load
     n_docs     int
     avg_len    float
     """
@@ -242,6 +253,11 @@ class InvertedIndex:
 
     def num_segments(self) -> int:
         return self.postings.select("segment").distinct().count()
+
+    def bm25_idf(self, df: int) -> float:
+        """idf = ln(1 + (N - df + 0.5)/(df + 0.5)) for one term."""
+        n = float(self.n_docs)
+        return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
     def bm25_idf_col(self):
         """idf = ln(1 + (N - df + 0.5)/(df + 0.5)) as a Column over
@@ -345,7 +361,7 @@ def postings_from_tokens(
         F.size("tokens").alias("doc_len"),
         F.posexplode("tokens").alias("pos", "term"),
     ).withColumn(
-        "segment", (F.col("doc_id") / F.lit(docs_per_segment)).cast("long")
+        "segment", segment_col(docs_per_segment)
     ).withColumn(
         "tb", F.pmod(F.hash("term"), F.lit(term_buckets))
     )
@@ -444,9 +460,7 @@ def postings_from_corpus(
     """
     from ..functions.analysis import _analyze_py
 
-    part = corpus.withColumn(
-        "segment", (F.col("doc_id") / F.lit(docs_per_segment)).cast("long")
-    )
+    part = corpus.withColumn("segment", segment_col(docs_per_segment))
     # EXPLICIT repartition by the group key: this stage is
     # Python-CPU-bound (~100x more CPU per shuffled byte than a JVM
     # stage), so AQE's byte-based coalescing — which would collapse the
@@ -840,7 +854,7 @@ def postings_from_tokens_agg(
         F.size("tokens").alias("doc_len"),
         F.posexplode("tokens").alias("pos", "term"),
     )
-    seg = (F.col("doc_id") / F.lit(docs_per_segment)).cast("long").alias("segment")
+    seg = segment_col(docs_per_segment).alias("segment")
 
     # shuffle 1: per (segment, term, doc) tf + sorted positions.
     td = exploded.groupBy(seg, "term", "doc_id").agg(
@@ -900,7 +914,9 @@ def build_index(
     applyInPandas (``postings_from_corpus``).
     """
     doc_stats = corpus.select(
-        "doc_id", F.size(tokens_expr("text")).alias("doc_len")
+        "doc_id",
+        segment_col(docs_per_segment).alias("segment"),
+        F.size(tokens_expr("text")).alias("doc_len"),
     )
     row = doc_stats.agg(
         F.count("*").alias("n"), F.avg("doc_len").alias("avg")
@@ -958,9 +974,8 @@ def merge_segments(
     p = index.postings
     if index.positional:
         p = with_positions(p)  # loaded indexes carry only the compressed blob
-    p = p.withColumn(
-        "segment", (F.col("segment") / F.lit(factor)).cast("long")
-    )
+    new_segment = (F.col("segment") / F.lit(factor)).cast("long")
+    p = p.withColumn("segment", new_segment)
     part_fields = ["doc_ids", "tfs"] + (["positions"] if index.positional else [])
     # One struct per OLD segment, keyed by its first doc_id; sorting
     # those structs and flattening restores global doc_id order because
@@ -981,7 +996,7 @@ def merge_segments(
     # Re-encode blobs/blocks for the merged lists. Per-doc lengths are
     # recovered from doc_stats via an explode + join; Catalyst/AQE
     # picks broadcast vs sort-merge by doc_stats size.
-    dl = index.doc_stats
+    dl = index.doc_stats.select("doc_id", "doc_len")
     with_len = (
         merged.select("segment", "term", F.explode("doc_ids").alias("_d"))
         .join(dl, F.col("_d") == dl.doc_id, "left")
@@ -1007,7 +1022,7 @@ def merge_segments(
     return InvertedIndex(
         postings=merged,
         term_stats=index.term_stats,
-        doc_stats=index.doc_stats,
+        doc_stats=index.doc_stats.withColumn("segment", new_segment),
         n_docs=index.n_docs,
         avg_len=index.avg_len,
         positional=index.positional,

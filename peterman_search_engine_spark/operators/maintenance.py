@@ -113,7 +113,7 @@ def upsert_documents(
     delete_documents) and compact on a schedule; this function is the
     exact form."""
     from ..functions.analysis import tokens_expr
-    from .indexer import postings_from_corpus
+    from .indexer import postings_from_corpus, segment_col
 
     if docs_per_segment is None:
         from .indexer import DEFAULT_DOCS_PER_SEGMENT
@@ -127,7 +127,9 @@ def upsert_documents(
     ).dropDuplicates(["doc_id"])
     ids = updated.select("doc_id").distinct()
     upd_stats = updated.select(
-        "doc_id", F.size(tokens_expr("text")).alias("doc_len")
+        "doc_id",
+        segment_col(docs_per_segment).alias("segment"),
+        F.size(tokens_expr("text")).alias("doc_len"),
     )
     # Already-tombstoned docs must NOT resurface via as-built doc_stats
     # (compact below removes their postings; stats must agree).
@@ -181,7 +183,8 @@ def renumber_segments(index: InvertedIndex) -> InvertedIndex:
     close gaps; ``InvertedIndexDeletionTest.java:73,141,192`` counts
     segments AFTER that renumbering). Metadata-sized: the mapping is
     #segments rows computed with one distinct + window, broadcast back
-    onto the postings; no posting payload is rewritten."""
+    onto the postings and doc_stats; no posting payload is
+    rewritten."""
     from pyspark.sql import Window
 
     segs = index.postings.select("segment").distinct()
@@ -196,7 +199,14 @@ def renumber_segments(index: InvertedIndex) -> InvertedIndex:
         .withColumnRenamed("_new", "segment")
         .select(cols)
     )
-    return dataclasses.replace(index, postings=p)
+    # docs without any posting row (empty text) may sit in a segment
+    # with no postings: they keep a row, under segment -1
+    ds = (
+        index.doc_stats.join(F.broadcast(mapping), "segment", "left")
+        .withColumn("segment", F.coalesce("_new", F.lit(-1).cast("long")))
+        .select(index.doc_stats.columns)
+    )
+    return dataclasses.replace(index, postings=p, doc_stats=ds)
 
 
 def compact_deletes(
@@ -249,7 +259,9 @@ def compact_deletes(
         F.col("_z.tfs").alias("tf"),
         *([F.col("_z.positions").alias("pos")] if index.positional else []),
     )
-    live = ex.join(tomb, "doc_id", "left_anti").join(doc_stats, "doc_id")
+    live = ex.join(tomb, "doc_id", "left_anti").join(
+        doc_stats.select("doc_id", "doc_len"), "doc_id"
+    )
 
     entry = F.struct(
         F.col("doc_id"),

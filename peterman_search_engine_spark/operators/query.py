@@ -1,34 +1,48 @@
 """Query operators — SURVEY.md §2.3 (Q1-Q13, Q17).
 
-Every query is a declarative DataFrame plan over the index tables:
+Every query is a DataFrame plan over the index tables:
 
-* query terms (tiny) join the postings via an IN-filter — Parquet
+* query terms (tiny) filter the postings via an IN-filter — Parquet
   predicate pushdown prunes files by the ``term`` column, the
   Spark-side analogue of the reference's per-segment dictionary skip
   (``InvertedIndexManager.java:390, 617``).
-* doc-level aggregation is a hash aggregate (Catalyst partial+final —
-  exactly the reference's per-segment accumulator maps, ``IIM:614-638``,
-  but distributed).
+* ranked queries (BM25, TF-IDF; batch BM25 in ``batch.py``) score
+  SEGMENT-LOCALLY. Segments are disjoint doc_id ranges, so a doc's
+  full score comes from its own segment's posting rows — the
+  reference's per-segment accumulator maps (``IIM:614-638``). The
+  driver reads the query terms' df with one term_stats collect and
+  turns them into per-term weights (Python constants, no idf join).
+  The term-filtered rows ``(segment, term, doc_ids, tfs)`` are grouped
+  by segment (BM25 cogroups them with that segment's doc_stats rows
+  for doc_len) and ONE Arrow function per group
+  (``functions/scoring.py``) flattens the list buffers, computes every
+  contribution in numpy and sums them per doc with ``np.unique`` +
+  ``bincount``. No exploded hit row exists and nothing is exchanged
+  on doc_id.
+* boolean queries (AND/OR/NOT, phrase, proximity) explode doc_ids and
+  use hash aggregates / semi-joins.
 * top-k is ``orderBy(desc(score), doc_id).limit(k)`` →
   ``TakeOrderedAndProject`` (per-partition bounded heap + driver merge;
   the distributed form of the reference's MinMaxPriorityQueue,
   ``IIM:574-582``). Tiebreak is the canonical (-score, doc_id) (§2.4).
 * block-max WAND (north-star addition) prunes posting blocks whose
   stored upper bound cannot beat the running k-th score — implemented
-  in ``wand.py`` as an applyInPandas over per-segment posting groups.
+  in ``wand.py``; its exhaustive route is this module's BM25 kernel.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+import math
+from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import scoring
 from ..functions.analysis import analyze_query
-from .indexer import B, K1, InvertedIndex
+from .indexer import InvertedIndex
 
 
 def _analyzed(index: InvertedIndex, terms: list[str]) -> list[str]:
@@ -557,50 +571,71 @@ def _phrase_join(per_term: DataFrame, toks: list[str]) -> DataFrame:
     return joined.filter(cond).select("doc_id")
 
 
+# -- the segment-local scoring kernel (kernels: functions/scoring.py) ----------
+
+SCORES_SCHEMA = "doc_id long, score double"
+
+
+def _term_df(index: InvertedIndex, terms) -> dict[str, int]:
+    """df of the query terms, from ONE term_stats collect of at most
+    |terms| rows. Terms absent from the corpus drop out — the
+    reference's dictionary skip (IIM:617)."""
+    if not terms:
+        return {}
+    rows = (
+        index.term_stats.filter(F.col("term").isin(sorted(set(terms))))
+        .select("term", "df")
+        .collect()
+    )
+    return {r["term"]: int(r["df"]) for r in rows}
+
+
+def _segment_groups(
+    index: InvertedIndex, terms, fn, schema: str, doc_stats: DataFrame | None = None
+) -> DataFrame:
+    """Run ``fn`` once per segment over that segment's query-term
+    posting rows ``(segment, term, doc_ids, tfs)`` — cogrouped with the
+    segment's ``(segment, doc_id, doc_len)`` rows when ``doc_stats`` is
+    given. A doc's postings all live in its own segment, so each call
+    sees every row that contributes to its docs' scores."""
+    post = (
+        _postings_for(index, terms)
+        .select("segment", "term", "doc_ids", "tfs")
+        .groupBy("segment")
+    )
+    if doc_stats is None:
+        return post.applyInArrow(fn, schema)
+    if "segment" not in doc_stats.columns:
+        raise ValueError(
+            "doc_stats needs a segment column: the segment of each doc's "
+            "posting rows (InvertedIndex docstring)"
+        )
+    lens = doc_stats.select("segment", "doc_id", "doc_len").groupBy("segment")
+    return post.cogroup(lens).applyInArrow(fn, schema)
+
+
 # -- Q5-Q8: TF-IDF (reference semantics) --------------------------------------
 
 def tfidf_scores(index: InvertedIndex, terms: list[str]) -> DataFrame:
     """Q5-Q8 exact reference semantics: idf = log10(N/df) (IIM:567);
     query weight = query-token-count × idf (IIM:671-689); score =
     dot / sqrt(Σ_query-terms (tf·idf)²) (IIM:629-650 — the norm runs
-    over query-term components only, §2.4). Returns (doc_id, score)."""
+    over query-term components only, §2.4). Scored by the
+    segment-local kernel; no doc length is needed, so the posting rows
+    are grouped by segment alone. Returns (doc_id, score)."""
     toks = _analyzed(index, terms)
     spark = index.postings.sparkSession
-    if not toks:
-        return spark.createDataFrame([], "doc_id long, score double")
     qtf: dict[str, int] = {}
     for t in toks:
         qtf[t] = qtf.get(t, 0) + 1
-    qdf = spark.createDataFrame(
-        [(t, float(n)) for t, n in sorted(qtf.items())], "term string, qtf double"
-    )
-    n_docs = float(index.n_docs)
+    df = _term_df(index, qtf)
     # idf from GLOBAL term stats (pass 1, IIM:543-569)
-    idf = (
-        index.term_stats.join(F.broadcast(qdf), "term")
-        .withColumn("idf", F.log10(F.lit(n_docs) / F.col("df")))
-        .select("term", "qtf", "idf")
-    )
-    p = _postings_for(index, list(qtf))
-    hits = p.select(
-        "term", F.explode(F.arrays_zip("doc_ids", "tfs")).alias("_z")
-    ).select(
-        "term", F.col("_z.doc_ids").alias("doc_id"), F.col("_z.tfs").alias("tf")
-    )
-    w = F.col("tf") * F.col("idf")
-    scored = (
-        hits.join(F.broadcast(idf), "term")
-        .withColumn("_dot", w * F.col("qtf") * F.col("idf"))
-        .withColumn("_len", w * w)
-        .groupBy("doc_id")
-        .agg(F.sum("_dot").alias("dot"), F.sum("_len").alias("len"))
-        .withColumn(
-            "score",
-            F.when(F.col("len") > 0, F.col("dot") / F.sqrt("len")).otherwise(F.lit(0.0)),
-        )
-        .select("doc_id", "score")
-    )
-    return _live(index, scored)
+    n_docs = float(index.n_docs)
+    idf = {t: math.log10(n_docs / df[t]) for t in qtf if t in df}
+    if not idf:
+        return spark.createDataFrame([], SCORES_SCHEMA)
+    kernel = partial(scoring.tfidf_segment, idf, qtf)
+    return _live(index, _segment_groups(index, sorted(idf), kernel, SCORES_SCHEMA))
 
 
 def search_tfidf(index: InvertedIndex, terms: list[str], top_k: int | None) -> DataFrame:
@@ -612,43 +647,28 @@ def search_tfidf(index: InvertedIndex, terms: list[str], top_k: int | None) -> D
 # -- BM25 (the rebuild's primary ranker) ---------------------------------------
 
 def bm25_scores_weighted(
-    index: InvertedIndex, weights: dict[str, float]
+    index: InvertedIndex,
+    weights: dict[str, float],
+    *,
+    df: dict[str, int] | None = None,
 ) -> DataFrame:
     """BM25 over ALREADY-ANALYZED terms with explicit per-term query
     weights (the general form: plain queries use integer query-tf,
     relevance-feedback expansion uses fractional weights). k1=1.2,
-    b=0.75; idf = ln(1+(N-df+.5)/(df+.5)). Returns (doc_id, score)."""
+    b=0.75; idf = ln(1+(N-df+.5)/(df+.5)). ``df`` is the terms'
+    dictionary lookup when the caller already holds it (WAND's gate);
+    otherwise one term_stats collect reads it. Scored by the
+    segment-local kernel, cogrouped with doc_stats for doc_len.
+    Returns (doc_id, score)."""
     spark = index.postings.sparkSession
-    if not weights:
-        return spark.createDataFrame([], "doc_id long, score double")
-    qdf = spark.createDataFrame(
-        [(t, float(w)) for t, w in sorted(weights.items())],
-        "term string, qtf double",
-    )
-    idf = (
-        index.term_stats.join(F.broadcast(qdf), "term")
-        .withColumn("idf", index.bm25_idf_col())
-        .select("term", "qtf", "idf")
-    )
-    p = _postings_for(index, list(weights))
-    hits = p.select(
-        "term", F.explode(F.arrays_zip("doc_ids", "tfs")).alias("_z")
-    ).select(
-        "term", F.col("_z.doc_ids").alias("doc_id"), F.col("_z.tfs").alias("tf")
-    )
-    dl = index.doc_stats
-    denom = F.col("tf") + F.lit(K1) * (
-        F.lit(1 - B) + F.lit(B) * F.col("doc_len") / F.lit(index.avg_len)
-    )
-    contrib = F.col("qtf") * F.col("idf") * F.col("tf") * F.lit(K1 + 1) / denom
+    if df is None:
+        df = _term_df(index, weights)
+    w = {t: float(q) * index.bm25_idf(df[t]) for t, q in weights.items() if t in df}
+    if not w:
+        return spark.createDataFrame([], SCORES_SCHEMA)
+    kernel = partial(scoring.bm25_segment, w, index.avg_len)
     return _live(
-        index,
-        hits.join(F.broadcast(idf), "term")
-        .join(dl, "doc_id")
-        .withColumn("_c", contrib)
-        .groupBy("doc_id")
-        .agg(F.sum("_c").alias("score"))
-        .select("doc_id", "score"),
+        index, _segment_groups(index, sorted(w), kernel, SCORES_SCHEMA, index.doc_stats)
     )
 
 

@@ -301,9 +301,8 @@ def lm_dirichlet_scores(
     Query terms absent from the collection (cf = 0) are dropped — they
     shift every doc's score by the same -inf and carry no signal.
 
-    Plan shape is identical to :func:`..query.bm25_scores`: postings
-    IN-scan -> explode -> broadcast join on the O(|q|) term table ->
-    hash aggregate -> join doc_stats. Driver state: the O(|q|)
+    Plan: postings IN-scan -> explode -> broadcast join on the O(|q|)
+    term table -> hash aggregate -> join doc_stats. Driver state: the O(|q|)
     (term, cf) rows and one scalar (|C|). Returns (doc_id, score).
     """
     toks = _analyzed(index, terms)

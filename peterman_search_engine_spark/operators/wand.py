@@ -73,7 +73,7 @@ from pyspark.sql import functions as F
 from ..functions.analysis import analyze_query
 from ..functions.codec import delta_varint_decode
 from .indexer import B, K1, InvertedIndex
-from .query import bm25_scores, top_k_df
+from .query import bm25_scores, bm25_scores_weighted, top_k_df
 
 # Break-even posting volume for the pruned plan (Σ df over query
 # terms). MEASURED, not guessed (scripts/wand_regime.py, local[32]):
@@ -210,9 +210,15 @@ def bm25_topk_wand(
     trows = index.term_stats.filter(
         F.col("term").isin(sorted(qtf))
     ).select("term", "df").collect()
-    est = int(sum(r["df"] for r in trows))
+    df_by_term = {r["term"]: int(r["df"]) for r in trows}
+    est = sum(df_by_term.values())
+
+    def _exhaustive() -> DataFrame:
+        # the same lookup weights the exhaustive kernel: no second one
+        return top_k_df(bm25_scores_weighted(index, qtf, df=df_by_term), k)
+
     if not force_prune and est < prune_min_entries:
-        res = bm25_topk_exhaustive(index, terms, k)
+        res = _exhaustive()
         if return_stats:
             return res, {"gated_exhaustive": True, "est_entries": est}
         return res
@@ -335,10 +341,9 @@ def bm25_topk_wand(
     # pure overhead. Route to the exhaustive plan; the planner spend
     # so far is O(metadata) + one seed segment (~1/#segments of the
     # corpus). force_prune bypasses (diagnostics / A-B evidence).
-    df_by_term = {r["term"]: int(r["df"]) for r in trows}
     ess_df = sum(df_by_term[t] for t in ess)
     if not force_prune and est and ess_df >= ESSENTIAL_DF_ROUTE_FRACTION * est:
-        res = bm25_topk_exhaustive(index, terms, k)
+        res = _exhaustive()
         if return_stats:
             return res, {
                 "gated_exhaustive": True,

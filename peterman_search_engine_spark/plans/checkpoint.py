@@ -23,7 +23,9 @@ posting bytes, wall seconds — queryable as a DataFrame via
 Layout under ``index_dir``::
 
     stats.json                         corpus stats (n_docs, avg_len, flags)
-    doc_stats/                         parquet (doc_id, doc_len)
+    doc_stats/                         parquet (doc_id, doc_len); load_index
+                                       adds segment = doc_id // docs_per_segment,
+                                       the segment of the doc's posting rows
     postings/group=<g>/                parquet posting rows for the group
     term_stats/                        parquet, derived after all groups done
     _manifest/group_<g>.json           lineage row (written last)
@@ -42,6 +44,7 @@ from ..operators.indexer import (
     DEFAULT_BLOCK_SIZE,
     InvertedIndex,
     postings_from_corpus,
+    segment_col,
 )
 from .storage import TableStore
 
@@ -251,12 +254,15 @@ def load_index(
 
         postings = with_positions(postings)
         positions_decoded = True
-    from ..operators.indexer import DEFAULT_BLOCK_SIZE
+    # the segment is a function of doc_id here, so it is derived, not stored
+    doc_stats = store.read("doc_stats").withColumn(
+        "segment", segment_col(stats["docs_per_segment"])
+    )
 
     return InvertedIndex(
         postings=postings,
         term_stats=store.read("term_stats"),
-        doc_stats=store.read("doc_stats"),
+        doc_stats=doc_stats,
         n_docs=stats["n_docs"],
         avg_len=stats["avg_len"],
         positional=stats["positional"],

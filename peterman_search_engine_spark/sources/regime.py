@@ -127,8 +127,12 @@ def build_regime_index(
         rare_every=rare_every, rare_span=rare_span,
     ).write.mode("overwrite").parquet(f"{work_dir}/corpus")
     corpus = spark.read.parquet(f"{work_dir}/corpus")
+    # segment = the input partition, exactly as the aligned build
+    # below assigns it (both scan the same files, no exchange between)
     corpus.select(
-        "doc_id", F.size(tokens_expr("text")).alias("doc_len")
+        "doc_id",
+        F.spark_partition_id().cast("long").alias("segment"),
+        F.size(tokens_expr("text")).alias("doc_len"),
     ).write.mode("overwrite").parquet(f"{work_dir}/doc_stats")
     doc_stats = spark.read.parquet(f"{work_dir}/doc_stats")
     avg_len = float(doc_stats.agg(F.avg("doc_len")).collect()[0][0] or 0.0)

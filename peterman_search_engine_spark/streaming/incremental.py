@@ -69,6 +69,7 @@ from pyspark.sql import functions as F
 from ..operators.indexer import (
     DEFAULT_BLOCK_SIZE,
     postings_from_tokens,
+    segment_col,
     tokenize_corpus,
 )
 
@@ -416,8 +417,11 @@ def load_streaming_index(spark: SparkSession, index_dir: str):
     ds = spark.read.option(
         "basePath", os.path.join(index_dir, "doc_stats")
     ).parquet(os.path.join(index_dir, "doc_stats"))
-    if "batch" in ds.columns:
-        ds = ds.drop("batch")
+    # stream segments are doc_id ranges (compaction keeps them), so the
+    # segment is derived, never read from disk
+    ds = ds.select("doc_id", "doc_len").withColumn(
+        "segment", segment_col(cfg["docs_per_segment"])
+    )
 
     # superseded turns (upserts): queries exclude them via _live; n_docs
     # / avg_len above are already live-exact (manifest fold). df/cf
@@ -520,7 +524,9 @@ def reencode_blocks(
         # live-only doc_stats (batch=-1 keeps the partition layout)
         if os.path.isdir(ds_root + ".new"):
             shutil.rmtree(ds_root + ".new")
-        merged.doc_stats.write.parquet(os.path.join(ds_root + ".new", "batch=-1"))
+        merged.doc_stats.select("doc_id", "doc_len").write.parquet(
+            os.path.join(ds_root + ".new", "batch=-1")
+        )
         # prune superseded rows from the conv→doc map so a future
         # upsert of the same conv never re-tombstones (and the manifest
         # fold never double-subtracts) docs that are already gone

@@ -6,7 +6,8 @@ Checks (each printed with the relevant plan excerpt):
 1. term-filter PUSHDOWN to the parquet scan of a persisted index
    (``PushedFilters: [In(term, ...)]``) — the distributed analogue of
    the reference's per-segment dictionary skip;
-2. BROADCAST of the (tiny) query-term table in the BM25 scoring join;
+2. segment-local BM25 scoring: posting rows cogrouped with doc_stats
+   on segment into one Arrow function, no exchange keyed on doc_id;
 3. top-k as ``TakeOrderedAndProject`` (per-partition bounded heap +
    driver merge — the reference's MinMaxPriorityQueue, distributed);
 4. the aligned posting build contains NO Exchange (zero-shuffle);
@@ -66,9 +67,11 @@ def main() -> None:
     bm25 = Q.bm25_scores(idx, ["spark", "merge"])
     plan = formatted(bm25.orderBy(F.desc("score"), F.asc("doc_id")).limit(10))
     sections.append((
-        "BM25 top-k over the persisted index",
+        "BM25 top-k over the persisted index — segment-local kernel: "
+        "term-filtered posting rows cogrouped with doc_stats on segment, "
+        "one Arrow function per segment, no exchange keyed on doc_id",
         plan,
-        ["PushedFilters", "BroadcastHashJoin", "TakeOrderedAndProject"],
+        ["PushedFilters", "FlatMapCoGroupsInArrow", "TakeOrderedAndProject"],
     ))
 
     aligned = postings_from_aligned_corpus(
@@ -101,9 +104,9 @@ def main() -> None:
 
     bm25f = search_bm25f(idx, ["spark", "merge"], 10)
     sections.append((
-        "BM25F fielded top-k — the plain-BM25 plan plus one JVM array "
-        "filter over the stored position lists (no re-tokenization, "
-        "no Python); same pushdown/broadcast/top-k markers",
+        "BM25F fielded top-k — explode + broadcast term join + hash "
+        "aggregate, with one JVM array filter over the stored position "
+        "lists (no re-tokenization, no Python)",
         formatted(bm25f),
         ["PushedFilters", "BroadcastHashJoin", "TakeOrderedAndProject"],
     ))
@@ -131,10 +134,9 @@ def main() -> None:
 
     lm = search_lm_dirichlet(idx, ["spark", "merge"], 10)
     sections.append((
-        "LM-Dirichlet top-k — identical shape to the BM25 plan "
-        "(postings IN-scan, broadcast O(|q|) term table, hash "
-        "aggregate, bounded top-k); the unmatched-term mass is a "
-        "closed-form column, not extra rows",
+        "LM-Dirichlet top-k — postings IN-scan, broadcast O(|q|) term "
+        "table, hash aggregate, bounded top-k; the unmatched-term mass "
+        "is a closed-form column, not extra rows",
         formatted(lm),
         ["PushedFilters", "BroadcastHashJoin", "TakeOrderedAndProject"],
     ))

@@ -205,6 +205,29 @@ def run_build(
     return json.loads(line)
 
 
+def hand_maintained_blocks(md: str) -> str:
+    """The ``<!-- hand-maintained --> ... <!-- /hand-maintained -->``
+    blocks of an existing markdown file, each followed by a blank
+    line. Warns on stderr when the file exists but cannot be read or
+    holds no such block (its prose would be lost on rewrite)."""
+    if not os.path.exists(md):
+        return ""
+    try:
+        with open(md) as f:
+            old_md = f.read()
+    except OSError as e:
+        print(f"scaling: cannot read {md} ({e}); its hand-maintained "
+              "blocks are not carried over", file=sys.stderr)
+        return ""
+    blocks = re.findall(
+        r"<!-- hand-maintained -->\s*\n.*?<!-- /hand-maintained -->",
+        old_md, re.S,
+    )
+    if not blocks:
+        print(f"scaling: no hand-maintained blocks found in {md}", file=sys.stderr)
+    return "".join(b.rstrip("\n") + "\n\n" for b in blocks)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--tier", default="bench")
@@ -452,19 +475,7 @@ def main() -> None:
     # existing file is re-inserted verbatim before the "Why N=2"
     # section. Without this, every scaling run silently deleted
     # prose added to BASELINE.md by hand.
-    hand_blocks = ""
-    try:
-        with open(md) as f:
-            old_md = f.read()
-        hand_blocks = "".join(
-            b.rstrip("\n") + "\n\n"
-            for b in re.findall(
-                r"<!-- hand-maintained -->\n.*?<!-- /hand-maintained -->",
-                old_md, re.S,
-            )
-        )
-    except OSError:
-        pass
+    hand_blocks = hand_maintained_blocks(md)
     with open(md, "w") as f:
         f.write(
             "# BENCH/BASELINE — two-cluster-size scaling evidence\n\n"

@@ -95,7 +95,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     t0 = time.perf_counter()
-    if args.keep and os.path.exists(f"{args.work_dir}/postings"):
+    # a kept build must carry doc_stats.segment (ranked queries score
+    # segment-locally); an older build is rebuilt
+    if (
+        args.keep
+        and os.path.exists(f"{args.work_dir}/postings")
+        and "segment" in spark.read.parquet(f"{args.work_dir}/doc_stats").columns
+    ):
         from peterman_search_engine_spark.operators.indexer import (
             DEFAULT_BLOCK_SIZE,
             InvertedIndex,

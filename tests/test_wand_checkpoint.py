@@ -101,13 +101,16 @@ def test_wand_exact_with_duplicate_posting_rows(spark, small_corpus):
     from peterman_search_engine_spark.operators.indexer import (
         InvertedIndex,
         postings_from_corpus,
+        segment_col,
     )
 
     n = small_corpus.count()
     cut = 777  # deliberately NOT a multiple of docs_per_segment=200
     assert cut < n
     doc_stats = small_corpus.select(
-        "doc_id", F.size(tokens_expr("text")).alias("doc_len")
+        "doc_id",
+        segment_col(200).alias("segment"),
+        F.size(tokens_expr("text")).alias("doc_len"),
     ).localCheckpoint(eager=True)
     avg_len = float(doc_stats.agg(F.avg("doc_len")).collect()[0][0])
     halves = [

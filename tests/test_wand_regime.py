@@ -52,7 +52,9 @@ def regime_index(spark, tmp_path_factory):
         spark, N, rare_every=RARE_EVERY, rare_span=RARE_SPAN, partitions=8
     ).localCheckpoint(eager=True)
     corpus.select(
-        "doc_id", F.size(tokens_expr("text")).alias("doc_len")
+        "doc_id",
+        F.spark_partition_id().cast("long").alias("segment"),
+        F.size(tokens_expr("text")).alias("doc_len"),
     ).write.mode("overwrite").parquet(f"{work}/doc_stats")
     doc_stats = spark.read.parquet(f"{work}/doc_stats")
     avg_len = float(doc_stats.agg(F.avg("doc_len")).collect()[0][0])
